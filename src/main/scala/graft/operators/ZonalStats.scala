@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -97,45 +98,74 @@ object ZonalStats {
     * of rings at typical ring sizes. */
   val MaxBroadcastPolyCells: Int = 1 << 22
 
-  /**
-   * Tiles x polygons histogram, executed as a broadcast-VARIABLE map
-   * join: the polygon side (small by the zonal contract) is exploded
-   * into covering cells, collected once, indexed by cell_id and shipped
-   * via sparkContext.broadcast; the tile side streams through ONE
-   * mapPartitions that accumulates per-(poly, band) histograms for the
-   * whole partition and emits only the merged partials. vs the previous
-   * plan-level joinWith(broadcast(pc)):
-   *  - pixels never enter Tungsten rows between the tiler and the
-   *    kernel (EliminateSerialization fuses the two typed operators —
-   *    the join forced a serialize + per-matched-pair deserialize of
-   *    every pixel array);
-   *  - the pre-shuffle row count drops from (pairs x distinct values)
-   *    to (polys x bands x values x partitions);
-   *  - ring/bbox conversion happens once per (cell, poly), not once per
-   *    joined pair.
-   * Output rows and the final groupBy are IDENTICAL to the join form
-   * (oracle-checked); the only shuffle is still the summary-sized
-   * histogram merge.
-   */
-  def histogram(tiles: Dataset[TileRow], polys: Dataset[PolyRow], cellRes: Int,
-                pipParallelism: Int = 0)
-               (implicit spark: SparkSession): DataFrame = {
+  /** The build side of the zonal join: the polygon layer's prefilter
+    * index, held in a broadcast variable. Build it once with [[index]]
+    * and probe it with any number of [[histogram]] calls; `destroy`
+    * releases the broadcast once no probe will run again. */
+  final class PolyIndex private[ZonalStats] (
+      private[ZonalStats] val bc: Broadcast[java.util.HashMap[Long, Array[PolyPre]]]) {
+    def destroy(): Unit = bc.destroy()
+  }
+
+  /** Build the zonal prefilter index: the polygon side (small by the
+    * zonal contract) is exploded into covering cells, collected once to
+    * the driver (bounded, fail-fast — see MaxBroadcastPolyCells),
+    * grouped by cell_id with rings/bbox pre-converted, and shipped via
+    * sparkContext.broadcast. One Spark job; `cellRes` must be the
+    * resolution the probed tiles were cut at. */
+  def index(polys: Dataset[PolyRow], cellRes: Int)
+           (implicit spark: SparkSession): PolyIndex = {
     import spark.implicits._
-    // driver-held build side (bounded, fail-fast — see MaxBroadcastPolyCells)
     val pcLocal = polyCells(polys, cellRes).limit(MaxBroadcastPolyCells + 1).collect()
     require(pcLocal.length <= MaxBroadcastPolyCells,
       s"zonal prefilter index exceeds $MaxBroadcastPolyCells (cell, polygon) " +
         "entries — coarsen cellRes or shard the polygon layer")
-    val index = new java.util.HashMap[Long, Array[PolyPre]]()
+    val byCell = new java.util.HashMap[Long, Array[PolyPre]]()
     pcLocal.groupBy(_.cell_id).foreach { case (cell, entries) =>
-      index.put(cell, entries.map { p =>
+      byCell.put(cell, entries.map { p =>
         val rings: Geom.Rings = p.rings.map(_.map(q => (q.x, q.y)))
         PolyPre(p.poly_id, rings,
           p.rings.map(_.map(_.x)), p.rings.map(_.map(_.y)),
           Geom.bbox(rings))
       })
     }
-    val bc = spark.sparkContext.broadcast(index)
+    new PolyIndex(spark.sparkContext.broadcast(byCell))
+  }
+
+  /** Tiles x polygons histogram: builds the polygon index ([[index]])
+    * and probes it once. Callers that probe the same layer repeatedly
+    * (per shard, per micro-batch) build the index themselves and call
+    * the [[PolyIndex]] form. */
+  def histogram(tiles: Dataset[TileRow], polys: Dataset[PolyRow], cellRes: Int,
+                pipParallelism: Int = 0)
+               (implicit spark: SparkSession): DataFrame =
+    histogram(tiles, index(polys, cellRes), pipParallelism)
+
+  /**
+   * The probe side of the zonal join, executed as a broadcast-VARIABLE
+   * map join: the build ends at the broadcast `index` (see [[index]]);
+   * here the tile side streams through ONE mapPartitions that looks each
+   * tile's cell_id up in the index, runs the exact per-pixel test and
+   * accumulates per-(poly, band) histograms for the whole partition,
+   * emitting only the merged partials. vs the previous plan-level
+   * joinWith(broadcast(pc)):
+   *  - pixels never enter Tungsten rows between the tiler and the
+   *    kernel (EliminateSerialization fuses the two typed operators —
+   *    the join forced a serialize + per-matched-pair deserialize of
+   *    every pixel array);
+   *  - the pre-shuffle row count drops from (pairs x distinct values)
+   *    to (polys x bands x values x partitions);
+   *  - ring/bbox conversion happens once per (cell, poly) at build
+   *    time, not once per joined pair.
+   * Output rows and the final groupBy are IDENTICAL to the join form
+   * (oracle-checked); the only shuffle is still the summary-sized
+   * histogram merge. The returned plan reads the broadcast when it
+   * runs, so `index` must not be destroyed before it has.
+   */
+  def histogram(tiles: Dataset[TileRow], index: PolyIndex, pipParallelism: Int)
+               (implicit spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    val bc = index.bc
     // Dense cells concentrate (tile x poly) pairs in few input partitions
     // and the map-side join gives AQE no shuffle to split — the salted
     // repartition below is the north rule's fix. Worth it exactly when the

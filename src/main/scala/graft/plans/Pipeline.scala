@@ -12,12 +12,13 @@ import graft.operators.{Tiler, ZonalStats}
  *
  * The image table is INGESTED with a materialized `shard` PARTITION
  * column (shard id = crc32(image_id) mod nShards — at 10^12-image scale
- * this is the ingest-shard key). Each shard runs the full decode -> tile
- * -> broadcast join -> PIP -> histogram slice and commits its histogram
- * rows to a SnapshotTable keyed by shard. A killed run leaves a manifest
- * covering the finished shards only; `run` derives pending work by
- * anti-joining the shard list against the manifest and processes just
- * that.
+ * this is the ingest-shard key). Each shard runs decode -> tile -> index
+ * probe -> PIP -> histogram against ONE polygon index built per `run`
+ * (the join's build side is shared, only the probe runs per shard) and
+ * commits its histogram rows to a SnapshotTable keyed by shard. A killed
+ * run leaves a manifest covering the finished shards only; `run` derives
+ * pending work by anti-joining the shard list against the manifest and
+ * processes just that.
  *
  * Scale: the per-shard scan is a COLUMN predicate on the partition key
  * (`col("shard") === s`), so Catalyst prunes the read to that shard's
@@ -50,46 +51,59 @@ object Pipeline {
     images.withColumn("shard", shardCol(nShards))
       .write.partitionBy("shard").mode("overwrite").parquet(path)
 
-  /** One shard's images: partition-pruned scan (Column predicate on the
-    * partition key — PlanShapeSpec gates the PartitionFilters). */
-  private[graft] def shardScan(imagesPath: String, shard: String)
+  /** One shard's images from the ingested table `images`: partition-
+    * pruned scan (Column predicate on the partition key — PlanShapeSpec
+    * gates the PartitionFilters). */
+  private[graft] def shardScan(images: DataFrame, shard: String)
                               (implicit spark: SparkSession): Dataset[ImageRow] = {
     import spark.implicits._
-    spark.read.parquet(imagesPath)
-      .where(col("shard") === shard)
-      .drop("shard").as[ImageRow]
+    images.where(col("shard") === shard).drop("shard").as[ImageRow]
   }
 
   /** Process all pending shards in batches of `batchShards` — ONE Spark
     * job (and one manifest publish) per batch rather than per shard, so
     * a 10^5-shard backlog doesn't pay 10^5 job/commit round-trips. The
     * manifest stays per-shard (resume granularity unchanged); only the
-    * in-flight batch is lost on a crash. Returns shards processed. */
+    * in-flight batch is lost on a crash. The polygon index and the
+    * image table's file listing are built on the first batch and shared
+    * by every shard of every batch; the index is destroyed when `run`
+    * returns or throws. A run with nothing pending builds neither.
+    * Returns shards processed. */
   def run(imagesPath: String, polys: Dataset[PolyRow],
           table: SnapshotTable, nShards: Int, tileSize: Int, cellRes: Int,
           failAfterShards: Int = Int.MaxValue, batchShards: Int = 16)
          (implicit spark: SparkSession): Set[String] = {
     val allShards = (0 until nShards).map(i => s"s$i")
     val pending = table.pending(allShards)
+    // the table's file listing and schema inference, once per run
+    lazy val images = spark.read.parquet(imagesPath)
+    var built: Option[ZonalStats.PolyIndex] = None
+    def index: ZonalStats.PolyIndex = built.getOrElse {
+      val idx = ZonalStats.index(polys, cellRes)
+      built = Some(idx)
+      idx
+    }
     var done = Set.empty[String]
     var started = 0
-    for (batch <- pending.grouped(math.max(1, batchShards))) {
-      if (started >= failAfterShards)
-        throw new RuntimeException(s"injected failure before shard ${batch.head}")
-      started += batch.size
-      // per-shard sub-histograms union into one commit: each scan is
-      // partition-pruned to its own shard's files, so the union reads the
-      // batch's bytes exactly once
-      val hist = batch.map { shard =>
-        ZonalStats.histogram(
-            Tiler.tiles(shardScan(imagesPath, shard), tileSize, cellRes),
-            polys, cellRes)
-          .withColumn("shard", lit(shard))
-      }.reduce(_.unionByName(_))
-      done ++= table.commit(hist, writer = s"pipeline-${batch.mkString("+")}",
-        declaredKeys = batch.toSet) // empty shard results still complete
-    }
-    done
+    try {
+      for (batch <- pending.grouped(math.max(1, batchShards))) {
+        if (started >= failAfterShards)
+          throw new RuntimeException(s"injected failure before shard ${batch.head}")
+        started += batch.size
+        // per-shard sub-histograms union into one commit: each scan is
+        // partition-pruned to its own shard's files, so the union reads
+        // the batch's bytes exactly once
+        val hist = batch.map { shard =>
+          ZonalStats.histogram(
+              Tiler.tiles(shardScan(images, shard), tileSize, cellRes),
+              index, pipParallelism = 0)
+            .withColumn("shard", lit(shard))
+        }.reduce(_.unionByName(_))
+        done ++= table.commit(hist, writer = s"pipeline-${batch.mkString("+")}",
+          declaredKeys = batch.toSet) // empty shard results still complete
+      }
+      done
+    } finally built.foreach(_.destroy())
   }
 
   /** Zonal stats over everything committed so far. */

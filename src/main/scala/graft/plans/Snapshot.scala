@@ -2,7 +2,10 @@ package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 
 /**
  * Iceberg-style snapshot-tagged table (SURVEY §2.9, §4.2): the batch
@@ -47,31 +50,35 @@ class SnapshotTable(spark: SparkSession, root: String, partKey: String) {
     * partition-path escaping, so values containing %, /, etc. resolve to
     * the directory the partitioned write actually produced. */
   private def partDirName(key: String): String =
-    s"$partKey=" + org.apache.spark.sql.catalyst
-      .catalog.ExternalCatalogUtils.escapePathName(key)
+    s"$partKey=" + ExternalCatalogUtils.escapePathName(key)
   private def partDir(v: Int, key: String): Path =
     new Path(dataDir(v), partDirName(key))
 
-  /** (parquet file count, total bytes) per partition subdir of snapshot
-    * `v`, in ONE recursive listing (object stores serve this as a flat
-    * LIST) — listing each partition dir separately would be one
-    * filesystem RPC per partition, which at the 10^4-10^5-partition
-    * design point is hours of serial driver-side listing on s3a://. */
-  private def parquetFilesByPart(v: Int): Map[String, (Int, Long)] = {
-    val d = dataDir(v)
+  /** Parquet files per partition subdir (keyed by dir name) under `dir`,
+    * in ONE recursive listing (object stores serve this as a flat LIST)
+    * — listing each partition dir separately would be one filesystem RPC
+    * per partition, which at the 10^4-10^5-partition design point is
+    * hours of serial driver-side listing on s3a://. */
+  private def parquetFilesByPart(dir: Path): Map[String, Seq[FileStatus]] = {
     val f = fs
-    if (!f.exists(d)) return Map.empty
-    val it = f.listFiles(d, true)
-    val acc = scala.collection.mutable.HashMap.empty[String, (Int, Long)]
+    if (!f.exists(dir)) return Map.empty
+    val it = f.listFiles(dir, true)
+    val acc = scala.collection.mutable.HashMap.empty[String, Vector[FileStatus]]
     while (it.hasNext) {
       val st = it.next()
       if (st.getPath.getName.endsWith(".parquet")) {
         val part = st.getPath.getParent.getName
-        val (c, b) = acc.getOrElse(part, (0, 0L))
-        acc(part) = (c + 1, b + st.getLen)
+        acc(part) = acc.getOrElse(part, Vector.empty) :+ st
       }
     }
     acc.toMap
+  }
+
+  /** Row count of one parquet file, from its footer (no data read). */
+  private def footerRows(st: FileStatus): Long = {
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(st, spark.sparkContext.hadoopConfiguration))
+    try r.getRecordCount finally r.close()
   }
 
   /** Move a fully-written, validated staging dir into place as
@@ -170,39 +177,33 @@ class SnapshotTable(spark: SparkSession, root: String, partKey: String) {
     // guard fires — the published manifest then points at missing data.
     // With staging, the loser fails at the exists/rename step below and
     // its staging dir is removed; the winner's data is never touched.
-    val outDir = dataDir(v)
     val staging = new Path(new Path(rootPath, "data"),
       s".staging-v$v-${java.util.UUID.randomUUID().toString.take(8)}")
-    // write FIRST, metrics from the WRITTEN snapshot: a pre-write
+    // write FIRST, metrics from the WRITTEN files: a pre-write
     // count().collect() would execute the incoming plan twice (the
     // whole batch job re-runs for the second action) and, under any
     // upstream nondeterminism, describe different data than what the
-    // write then produced. The read-back count is partition-pruned
-    // columnar metadata over the snapshot we just wrote — cheap, and
-    // the manifest rows/bytes now describe the committed bytes exactly.
+    // write then produced. ONE recursive listing of the staging dir plus
+    // each file's parquet footer gives per-partition rows and bytes with
+    // no Spark job — the manifest describes the committed bytes exactly.
     fresh.write.partitionBy(partKey).mode("overwrite").parquet(staging.toString)
-    val wrotePartDirs = fs.exists(staging) && fs.listStatus(staging).iterator
-      .exists(s => s.isDirectory && s.getPath.getName.startsWith(s"$partKey="))
-    val counted: Map[String, Long] =
-      if (!wrotePartDirs) Map.empty
-      else spark.read.schema(fresh.schema).parquet(staging.toString)
-        .groupBy(partKey).count() // explicit schema: no partition-type
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap // inference
-    if (counted.contains(null)) {
+    val written = parquetFilesByPart(staging).filter(_._1.startsWith(s"$partKey="))
+    if (written.contains(s"$partKey=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}")) {
       fs.delete(staging, true)
       throw new IllegalArgumentException(
         s"commit to $root: partition column '$partKey' contains NULL " +
           "values — a snapshot partition value must be a real string")
     }
+    val counted: Map[String, (Long, Long)] = written.map { case (dir, files) =>
+      ExternalCatalogUtils.unescapePathName(dir.stripPrefix(s"$partKey=")) ->
+        (files.map(footerRows).sum, files.map(_.getLen).sum)
+    }
     val counts = counted ++ (declaredKeys -- prior.keySet -- counted.keySet)
-      .map(_ -> 0L)
+      .map(_ -> (0L, 0L))
     if (counts.isEmpty) { fs.delete(staging, true); return Set.empty }
     moveIntoPlace(staging, v)
-    // byte metrics from the files just written — ONE recursive listing of
-    // the snapshot dir, not one RPC per partition
-    val bytes = parquetFilesByPart(v)
-    val merged = prior ++ counts.map { case (k, n) =>
-      k -> PartMeta(n, bytes.getOrElse(partDirName(k), (0, 0L))._2, v, writer)
+    val merged = prior ++ counts.map { case (k, (n, b)) =>
+      k -> PartMeta(n, b, v, writer)
     }
     publishManifest(v, merged)
     counts.keySet
@@ -240,12 +241,12 @@ class SnapshotTable(spark: SparkSession, root: String, partKey: String) {
     // listing per DISTINCT live snapshot dir (a handful), not one RPC
     // per partition
     val filesBySnapshot = prior.values.map(_.snapshot).toSet
-      .map((sv: Int) => sv -> parquetFilesByPart(sv)).toMap
+      .map((sv: Int) => sv -> parquetFilesByPart(dataDir(sv))).toMap
     val plans = prior.toSeq.flatMap { case (k, m) =>
       if (m.rows == 0) None
       else {
         val nFiles =
-          filesBySnapshot(m.snapshot).getOrElse(partDirName(k), (0, 0L))._1
+          filesBySnapshot(m.snapshot).getOrElse(partDirName(k), Nil).size
         val target = math.max(1L, (m.bytes + maxFileBytes - 1) / maxFileBytes).toInt
         if (nFiles > target) Some(k -> target) else None
       }
@@ -265,11 +266,11 @@ class SnapshotTable(spark: SparkSession, root: String, partKey: String) {
       s".staging-v$v-${java.util.UUID.randomUUID().toString.take(8)}")
     salted.write.partitionBy(partKey).mode("overwrite")
       .parquet(staging.toString)
+    val files = parquetFilesByPart(staging)
     moveIntoPlace(staging, v)
-    val bytes = parquetFilesByPart(v)
     val merged = prior ++ plans.keys.map { k =>
       k -> PartMeta(prior(k).rows,
-        bytes.getOrElse(partDirName(k), (0, 0L))._2, v, writer)
+        files.getOrElse(partDirName(k), Nil).map(_.getLen).sum, v, writer)
     }
     publishManifest(v, merged)
     plans.keySet

@@ -84,4 +84,25 @@ class PipelineSpec extends AnyFunSuite {
     }.toMap
     assert(got2 == got)
   }
+
+  test("one polygon index per run, shared by every shard; none when nothing is pending") {
+    val root = Files.createTempDirectory("graft_pipe_idx_").toString
+    val table = new SnapshotTable(spark, root, "shard")
+    val imagesPath = Files.createTempDirectory("graft_pipe_idx_img_").toString + "/images"
+    Pipeline.ingest(spark.createDataset(images.toSeq), imagesPath, nShards)
+    // every read of the polygon layer passes through this map
+    val reads = spark.sparkContext.longAccumulator("polygon_reads")
+    val counted = spark.createDataset(polys.toSeq).map { p => reads.add(1L); p }
+
+    val done = Pipeline.run(imagesPath, counted, table, nShards, 64, cellRes,
+      batchShards = 1)
+    assert(done.size == nShards && nShards >= 3)
+    assert(reads.value == polys.length,
+      s"${reads.value} polygon reads over $nShards shards: index built more than once")
+
+    // a resume with nothing pending builds no index at all
+    assert(Pipeline.run(imagesPath, counted, table, nShards, 64, cellRes,
+      batchShards = 1).isEmpty)
+    assert(reads.value == polys.length, "a no-op resume read the polygon layer")
+  }
 }

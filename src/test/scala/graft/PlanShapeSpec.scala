@@ -333,7 +333,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val images = Synth.images(8, seed = 5L, bands = 1)
     val path = Files.createTempDirectory("graft_shardscan_").toString + "/images"
     Pipeline.ingest(spark.createDataset(images.toSeq), path, 4)
-    val p = plan(Pipeline.shardScan(path, "s1").toDF())
+    val p = plan(Pipeline.shardScan(spark.read.parquet(path), "s1").toDF())
     assert(p.contains("PartitionFilters"), s"no partition filters:\n$p")
     assert(p.matches("(?s).*PartitionFilters: \\[[^\\]]*shard[^\\]]*s1[^\\]]*\\].*"),
       s"shard predicate not pushed to PartitionFilters (full rescan!):\n$p")

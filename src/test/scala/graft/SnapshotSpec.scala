@@ -147,6 +147,29 @@ class SnapshotSpec extends AnyFunSuite {
     assert(t.currentVersion == v)
   }
 
+  test("manifest rows and bytes equal the written files (several per partition)") {
+    val root = freshRoot()
+    val t = new SnapshotTable(spark, root, "shard")
+    // unequal partition sizes, 4 files per partition
+    def skewed(keys: Seq[String]) = keys.zipWithIndex.flatMap { case (k, i) =>
+      (0 until 7 * (i + 1)).map(j => (k, j.toLong, s"payload-$k-$j"))
+    }.toDF("shard", "seq", "payload").repartition(4)
+    t.commit(skewed(Seq("a", "b", "c")), writer = "w1")
+    t.commit(skewed(Seq("a", "b", "c", "d", "e")), writer = "w2") // d, e fresh
+    assert(partFiles(root, 1, "c") > 1 && partFiles(root, 2, "e") > 1,
+      "fixture must write several files per partition")
+    val readBack = t.read().groupBy("shard").count().as[(String, Long)].collect().toMap
+    val meta = t.committed()
+    assert(meta.keySet == readBack.keySet)
+    meta.foreach { case (k, m) =>
+      assert(m.rows == readBack(k), k)
+      val files = Paths.get(root, "data", s"v${m.snapshot}", s"shard=$k").toFile
+        .listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(m.bytes == files.map(_.length).sum, k)
+    }
+    assert(meta("a").snapshot == 1 && meta("e").snapshot == 2)
+  }
+
   test("partition values Spark escapes in dir names round-trip (%, space, /)") {
     val root = freshRoot()
     val t = new SnapshotTable(spark, root, "shard")

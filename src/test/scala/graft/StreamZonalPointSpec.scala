@@ -83,18 +83,19 @@ class ImageStreamSpec extends AnyFunSuite {
     val polys = Synth.polygons(nExtra = 2)
     val cellRes = Tiler.resForCellSize(64.0)
     val out = Files.createTempDirectory("graft_stream_replay_").toString + "/hist"
-    val polyDs = spark.createDataset(polys.toSeq)
+    val index = ZonalStats.index(spark.createDataset(polys.toSeq), cellRes)
     val b0 = spark.createDataset(images.take(4).toSeq)
     val b1 = spark.createDataset(images.drop(4).toSeq)
 
-    ImageStream.writeBatchDelta(b0, 0L, polyDs, cellRes, 64, out)
-    ImageStream.writeBatchDelta(b1, 1L, polyDs, cellRes, 64, out)
+    ImageStream.writeBatchDelta(b0, 0L, index, cellRes, 64, out)
+    ImageStream.writeBatchDelta(b1, 1L, index, cellRes, 64, out)
     val once = ImageStream.stats(spark, out).collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> r.getAs[Long]("pix_count")).toMap
     // crash-between-write-and-checkpoint: batch 1 replays verbatim
-    ImageStream.writeBatchDelta(b1, 1L, polyDs, cellRes, 64, out)
+    ImageStream.writeBatchDelta(b1, 1L, index, cellRes, 64, out)
     val replayed = ImageStream.stats(spark, out).collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> r.getAs[Long]("pix_count")).toMap
     assert(replayed == once)
+    index.destroy()
   }
 }
