@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression,
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftBridge.{expression => exprOf, column => colOf}
-import graft.core.{Geom, GridIndex, S2, Hex}
+import graft.core.{GridIndex, S2, Hex}
 
 /**
  * Column-level spatial functions (SURVEY §2.10).
@@ -75,27 +75,6 @@ object SpatialFunctions {
     * fallback; boundary = inside). */
   def pointInPolygon(x: Column, y: Column, rings: Column): Column =
     colOf(PointInPolygonExpr(exprOf(x), exprOf(y), exprOf(rings)))
-
-  /** Internal-row rings -> Geom.Rings. Shared by expressions. */
-  private[graft] def ringsFromCatalyst(rd: ArrayData): Geom.Rings = {
-    val nRings = rd.numElements()
-    val out = new Array[Array[(Double, Double)]](nRings)
-    var r = 0
-    while (r < nRings) {
-      val ringData = rd.getArray(r)
-      val n = ringData.numElements()
-      val ring = new Array[(Double, Double)](n)
-      var i = 0
-      while (i < n) {
-        val row = ringData.getStruct(i, 2)
-        ring(i) = (row.getDouble(0), row.getDouble(1))
-        i += 1
-      }
-      out(r) = ring
-      r += 1
-    }
-    out
-  }
 }
 
 /** SQL-door form of gridCellId (the Column API composes built-ins and

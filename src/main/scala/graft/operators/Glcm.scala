@@ -3,21 +3,22 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{PolyRow, TileRow}
-import graft.core.{Geom, GridIndex}
 
 /**
  * GLCM texture statistics per polygon (reference texture_stats,
  * shape.py:1566-1731; GLCM via skimage greycomatrix shape.py:1704-1711):
  * contrast, dissimilarity, homogeneity, ASM, energy, correlation.
  *
- * Distributed shape: like ZonalStats.histogram but emitting PAIR
- * histograms (q1, q2, cnt) for pixel pairs at offset (dx, dy). The pair
- * ORIGIN must fall inside the polygon AND the owning cell (so tile
- * overlap never double-counts); the PARTNER only needs the polygon —
- * exactly skimage's full-window pair semantics. Pairs that cross a tile
- * boundary come from the tiler's HALO pixels: feed tiles built with
+ * Distributed shape: the same broadcast-variable map join over the
+ * [[PolyIndex]] as ZonalStats.histogram, but emitting PAIR histograms
+ * (q1, q2, cnt) for pixel pairs at offset (dx, dy). The pair ORIGIN must
+ * fall inside the polygon AND the owning cell (so tile overlap never
+ * double-counts); the PARTNER only needs the polygon — exactly skimage's
+ * full-window pair semantics. Pairs that cross a tile boundary come from
+ * the tiler's HALO pixels: feed tiles built with
  * `Tiler.tiles(..., halo = max(|dx|, |dy|))` and every reference pair
- * (shape.py:1704-1711) is formed exactly once, with zero shuffle.
+ * (shape.py:1704-1711) is formed exactly once, with zero shuffle; the only
+ * exchange is the summary-sized pair-histogram merge.
  * Values are quantized to `levels` bins (SURVEY §7 hard-point 5:
  * bounded buffer; the reference's uint8 regime quantized the same way).
  * The co-occurrence matrix is made symmetric (skimage symmetric=True)
@@ -39,78 +40,61 @@ object Glcm {
     require(halo >= math.max(math.abs(dx), math.abs(dy)) || halo == 0,
       s"halo $halo too small for offset ($dx, $dy) cross-tile pairs")
     import spark.implicits._
-    val pc = ZonalStats.polyCells(polys, cellRes)
-    val joined = tiles.joinWith(broadcast(pc), tiles("cell_id") === pc("cell_id"))
+    val table = PolyIndex.build(polys, cellRes).table
     val lv = levels
-    joined.flatMap { case (t, p) =>
-      val cb = GridIndex.cellBounds(p.cell_id)
-      val rings: Geom.Rings = p.rings.map(_.map(q => (q.x, q.y)))
-      val pb = Geom.bbox(rings)
-      // interior-tile shortcut (the ZonalStats.histogram fast path):
-      // when the rect spanned by ALL pixel centers this call can touch
-      // (core + one offset of halo) sits entirely inside the polygon,
-      // every PIP below is true — large polygons pay zero per-pixel
-      // geometry for interior tiles
-      val pad = (math.max(math.abs(dx), math.abs(dy)) + 0.5) * t.px
-      val centers = Geom.BBox(
-        t.x_min + 0.5 * t.px - pad, t.y_max - (t.th - 0.5) * t.px - pad,
-        t.x_min + (t.tw - 0.5) * t.px + pad, t.y_max - 0.5 * t.px + pad)
-      val fullInside =
-        pb.x0 <= centers.x0 && centers.x1 <= pb.x1 &&
-        pb.y0 <= centers.y0 && centers.y1 <= pb.y1 &&
-        Geom.rectInsidePolygon(centers, rings)
-      val acc = new scala.collection.mutable.HashMap[(Int, Int), Long]
-      def quant(v: Float): Int = math.min(lv - 1, math.max(0, (v / maxVal * lv).toInt))
-      // nodata pixels form NO pair (the reference masks them out of the
-      // GLCM, shape.py:1690-1694): unguarded, quant(NaN) = 0 and a
-      // sentinel clamps to 0 — phantom level-0 mass in every stat
-      val nod = t.nodata
-      def valid(v: Float): Boolean =
-        !v.isNaN && java.lang.Float.compare(v, nod) != 0
-      // origin: owning-cell bounds (dedupe) + polygon; partner: polygon
-      // only (it may sit in a neighbor cell — that's what the halo is for)
-      def insideOrigin(row: Int, c: Int): Boolean = {
-        val cx = t.x_min + (c + 0.5) * t.px
-        val cy = t.y_max - (row + 0.5) * t.px
-        cx >= cb.x0 && cx < cb.x1 && cy >= cb.y0 && cy < cb.y1 &&
-          (fullInside || Geom.pointInPolygon(cx, cy, rings))
-      }
-      def insidePartner(row: Int, c: Int): Boolean =
-        fullInside || {
-          val cx = t.x_min + (c + 0.5) * t.px
-          val cy = t.y_max - (row + 0.5) * t.px
-          Geom.pointInPolygon(cx, cy, rings)
-        }
-      // core region inside the (possibly halo-expanded) pixel array —
-      // the ONE shared definition (Tiler.coreWindow), so the cropping
-      // arithmetic cannot drift from the tiler's halo clipping and the
-      // halo-mismatch tripwire guards this consumer too
-      val (cLeft, rTop, coreW, coreH) =
-        if (halo == 0) (0, 0, t.tw, t.th)
-        else Tiler.coreWindow(t.tx, t.ty, t.tw, t.th, tileSize, halo)
-      // origins scan the core; partner indices bounds-check against the
-      // FULL array (halo included), handling negative offsets too
-      var row = rTop
-      while (row < rTop + coreH) {
-        val pr = row + dy
-        if (pr >= 0 && pr < t.th) {
-          var c = cLeft
-          while (c < cLeft + coreW) {
-            val pc2 = c + dx
-            if (pc2 >= 0 && pc2 < t.tw &&
-              valid(t.pixels(row * t.tw + c)) && valid(t.pixels(pr * t.tw + pc2)) &&
-              insideOrigin(row, c) && insidePartner(pr, pc2)) {
-              val a = quant(t.pixels(row * t.tw + c))
-              val b = quant(t.pixels(pr * t.tw + pc2))
-              acc.update((a, b), acc.getOrElse((a, b), 0L) + 1L)
-              acc.update((b, a), acc.getOrElse((b, a), 0L) + 1L) // symmetric
+    tiles.flatMap { t =>
+      val cell = table.value.get(t.cell_id)
+      if (cell == null) Iterator.empty
+      else {
+        def quant(v: Float): Int = math.min(lv - 1, math.max(0, (v / maxVal * lv).toInt))
+        // nodata pixels form NO pair (the reference masks them out of the
+        // GLCM, shape.py:1690-1694): unguarded, quant(NaN) = 0 and a
+        // sentinel clamps to 0 — phantom level-0 mass in every stat
+        val nod = t.nodata
+        def valid(v: Float): Boolean =
+          !v.isNaN && java.lang.Float.compare(v, nod) != 0
+        // core region inside the (possibly halo-expanded) pixel array —
+        // the ONE shared definition (Tiler.coreWindow), so the cropping
+        // arithmetic cannot drift from the tiler's halo clipping and the
+        // halo-mismatch tripwire guards this consumer too
+        val (cLeft, rTop, coreW, coreH) =
+          if (halo == 0) (0, 0, t.tw, t.th)
+          else Tiler.coreWindow(t.tx, t.ty, t.tw, t.th, tileSize, halo)
+        // origins: the cell-owned pixels of the core; partners: any pixel
+        // of the FULL array (halo included), negative offsets too — a
+        // partner may sit in a neighbor cell, that's what the halo is for
+        val rows = cell.rows(t.y_max, t.px, t.th, PolyIndex.Unclipped)
+        val cols = cell.cols(t.x_min, t.px, t.tw, PolyIndex.Unclipped)
+        val row0 = math.max(rows.lo, rTop); val row1 = math.min(rows.hi, rTop + coreH - 1)
+        val col0 = math.max(cols.lo, cLeft); val col1 = math.min(cols.hi, cLeft + coreW - 1)
+        cell.entries.iterator.flatMap { e =>
+          val fullInside = e.interior(t.x_min, t.y_max, t.px, t.tw, t.th)
+          def inside(row: Int, c: Int): Boolean =
+            fullInside || e.contains(t.x_min + (c + 0.5) * t.px, t.y_max - (row + 0.5) * t.px)
+          val acc = new scala.collection.mutable.HashMap[(Int, Int), Long]
+          var row = row0
+          while (row <= row1) {
+            val pr = row + dy
+            if (pr >= 0 && pr < t.th) {
+              var c = col0
+              while (c <= col1) {
+                val pc2 = c + dx
+                if (pc2 >= 0 && pc2 < t.tw &&
+                  valid(t.pixels(row * t.tw + c)) && valid(t.pixels(pr * t.tw + pc2)) &&
+                  inside(row, c) && inside(pr, pc2)) {
+                  val a = quant(t.pixels(row * t.tw + c))
+                  val b = quant(t.pixels(pr * t.tw + pc2))
+                  acc.update((a, b), acc.getOrElse((a, b), 0L) + 1L)
+                  acc.update((b, a), acc.getOrElse((b, a), 0L) + 1L) // symmetric
+                }
+                c += 1
+              }
             }
-            c += 1
+            row += 1
           }
+          acc.iterator.map { case ((a, b), n) => (e.polyId, t.band, a, b, n) }
         }
-        row += 1
       }
-      acc.iterator.map { case ((a, b), n) => (p.poly_id, t.band, a, b, n) }
     }.toDF("poly_id", "band", "q1", "q2", "cnt")
       .groupBy("poly_id", "band", "q1", "q2").agg(sum("cnt").as("cnt"))
   }

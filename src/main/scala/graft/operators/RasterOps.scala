@@ -23,20 +23,6 @@ object RasterOps {
 
   private val tileKey = Seq("image_id", "tx", "ty")
 
-  /** Driver-safe bounded collect for small-by-contract feature layers
-    * (rasterize burn layers, training-label maps): materializes at most
-    * max+1 rows — a layer over the contract fails FAST with a clear
-    * message instead of silently OOM-ing the driver. Layers above the
-    * bound belong in a cell-keyed broadcast join (ZonalStats.polyCells). */
-  private[operators] def boundedCollect[T](ds: Dataset[T], what: String,
-                                           max: Int = 1 << 20): Array[T] = {
-    val rows = ds.limit(max + 1).collect()
-    require(rows.length <= max,
-      s"$what layer exceeds the driver-broadcast contract ($max features); " +
-        "route it through a cell-keyed broadcast join instead")
-    rows
-  }
-
   /** mask_raster (raster.py:1031-1134): keep pixels == mval, else `fill`.
     * Native per-tile loop (PixelExprs) — the transform() HOF form paid an
     * interpreted lambda per pixel, measured ~4x the whole decode cost. */
@@ -125,43 +111,31 @@ object RasterOps {
 
   /**
    * zonal_rgb_idx (shape.py:1413-1502): per-polygon MEANS of all 11 RGB
-   * indices over the pixels inside each polygon. All-bands tiles join
-   * the broadcast polygon-cell prefilter, the PIP-passing pixels emit
-   * (poly_id, r, g, b) rows, and the index means are ONE grouped
-   * aggregate of codegen'd exprs — Catalyst's partial aggregation folds
-   * the per-pixel rows map-side, so the only shuffle carries
-   * (poly, 11 partial sums), never pixels. `shift` adds a constant to
-   * every band (callers use 1.0 to keep the reference's 1/(g*r)-style
-   * denominators away from zero on integer imagery).
+   * indices over the pixels inside each polygon. All-bands tiles probe the
+   * [[PolyIndex]] in a broadcast-variable map join (cell-owned,
+   * PIP-passing pixels; nodata is NOT skipped) and emit (poly_id, r, g, b)
+   * rows; the index means are ONE grouped aggregate of codegen'd exprs —
+   * Catalyst's partial aggregation folds the per-pixel rows map-side, so
+   * the only shuffle carries (poly, 11 partial sums), never pixels.
+   * `shift` adds a constant to every band (callers use 1.0 to keep the
+   * reference's 1/(g*r)-style denominators away from zero on integer
+   * imagery).
    */
   def zonalRgbIndices(tiles: Dataset[graft.MultiTileRow], polys: Dataset[PolyRow],
                       cellRes: Int, shift: Double = 0.0)
                      (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val pc = ZonalStats.polyCells(polys, cellRes)
-    val px = tiles.joinWith(broadcast(pc), tiles("cell_id") === pc("cell_id"))
-      .flatMap { case (t, p) =>
-        val cb = GridIndex.cellBounds(p.cell_id)
-        val rings: Geom.Rings = p.rings.map(_.map(q => (q.x, q.y)))
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Double, Double)]
-        var row = 0
-        while (row < t.th) {
-          val cy = t.y_max - (row + 0.5) * t.px
-          var c = 0
-          while (c < t.tw) {
-            val cx = t.x_min + (c + 0.5) * t.px
-            if (cx >= cb.x0 && cx < cb.x1 && cy >= cb.y0 && cy < cb.y1 &&
-              Geom.pointInPolygon(cx, cy, rings)) {
-              val i = row * t.tw + c
-              out += ((p.poly_id, t.bands(0)(i).toDouble,
-                t.bands(1)(i).toDouble, t.bands(2)(i).toDouble))
-            }
-            c += 1
-          }
-          row += 1
+    val table = PolyIndex.build(polys, cellRes).table
+    val px = tiles.flatMap { t =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Double, Double)]
+      val cell = table.value.get(t.cell_id)
+      if (cell != null)
+        cell.foreachOwned(t.x_min, t.y_max, t.px, t.tw, t.th) { (e, i) =>
+          out += ((e.polyId, t.bands(0)(i).toDouble,
+            t.bands(1)(i).toDouble, t.bands(2)(i).toDouble))
         }
-        out
-      }.toDF("poly_id", "r", "g", "b")
+      out
+    }.toDF("poly_id", "r", "g", "b")
     val aggs = rgbIndices(col("r") + shift, col("g") + shift, col("b") + shift)
       .map { case (n, e) => round(avg(e), 4).as(n) }
     px.groupBy("poly_id").agg(aggs.head, aggs.tail: _*)
@@ -303,40 +277,31 @@ object RasterOps {
 
   /** rasterize (raster.py:1773-1831): burn polygons into an image-aligned
     * grid — the inverse of polygonize. Produces mask tiles (1 inside,
-    * 0 outside; `burnClass` uses the polygon class value). The polygon
-    * layer broadcasts as a cell -> features map, so the burn is a typed
-    * map over tiles with ZERO shuffle (the old groupByKey-on-tile-key
-    * variant shuffled every pixel payload just to merge per-poly burns).
-    * Overlapping features burn in (poly_id, part) order — deterministic. */
+    * 0 outside; `burnClass` uses the polygon class value). A typed map
+    * over tiles probes the [[PolyIndex]] with ZERO shuffle and burns every
+    * PIP pixel of the tile row (not only the cell-owned ones). Overlapping
+    * features burn in (poly_id, part) order — deterministic. */
   def rasterize(tiles: Dataset[TileRow], polys: Dataset[PolyRow], cellRes: Int,
                 burnClass: Boolean = false)
                (implicit spark: SparkSession): Dataset[TileRow] = {
     import spark.implicits._
-    val byCell: Map[Long, Array[(Long, Int, Geom.Rings, Float)]] =
-      boundedCollect(polys, "rasterize burn").flatMap { p =>
-        val rings: Geom.Rings = p.rings.map(_.map(q => (q.x, q.y)))
-        val burn = if (burnClass) p.cls.toFloat else 1f
-        GridIndex.coverPolygon(rings, cellRes)
-          .map(c => c -> (p.poly_id, p.part, rings, burn))
-      }.groupBy(_._1).map { case (c, xs) =>
-        c -> xs.map(_._2).sortBy(f => (f._1, f._2))
-      }
-    val byCellB = spark.sparkContext.broadcast(byCell)
+    val table = PolyIndex.build(polys, cellRes).table
     tiles.map { t =>
       val out = new Array[Float](t.pixels.length)
-      byCellB.value.getOrElse(t.cell_id, Array.empty).foreach {
-        case (_, _, rings, burn) =>
-          var r = 0
-          while (r < t.th) {
-            val cy = t.y_max - (r + 0.5) * t.px
-            var c = 0
-            while (c < t.tw) {
-              val cx = t.x_min + (c + 0.5) * t.px
-              if (Geom.pointInPolygon(cx, cy, rings)) out(r * t.tw + c) = burn
-              c += 1
-            }
-            r += 1
+      val cell = table.value.get(t.cell_id)
+      if (cell != null) cell.entries.foreach { e =>
+        val burn = if (burnClass) e.cls.toFloat else 1f
+        val inside = e.interior(t.x_min, t.y_max, t.px, t.tw, t.th)
+        var r = 0
+        while (r < t.th) {
+          val cy = t.y_max - (r + 0.5) * t.px
+          var c = 0
+          while (c < t.tw) {
+            if (inside || e.contains(t.x_min + (c + 0.5) * t.px, cy)) out(r * t.tw + c) = burn
+            c += 1
           }
+          r += 1
+        }
       }
       t.copy(pixels = out)
     }

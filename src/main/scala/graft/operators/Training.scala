@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{MultiTileRow, PolyRow, TileRow}
-import graft.core.{Geom, GridIndex}
 
 /**
  * The reference's ML pipeline capability (SURVEY §3.3):
@@ -42,37 +41,23 @@ object Training {
   }
 
   /** get_training: per-pixel (label, features) rows — the flagship zonal
-    * join over all-bands tiles. Broadcast polygon-cell prefilter + PIP;
-    * the ONLY exchange in the plan is the broadcast itself. */
+    * join over all-bands tiles: a broadcast-variable map join over the
+    * [[PolyIndex]] (cell-owned, PIP-passing pixels; nodata is NOT
+    * skipped), the label being each entry's `cls`. No join operator and
+    * no exchange in the plan. */
   def extractSamples(tiles: Dataset[MultiTileRow], polys: Dataset[PolyRow], cellRes: Int)
                     (implicit spark: SparkSession): Dataset[Sample] = {
     import spark.implicits._
-    val pc = ZonalStats.polyCells(polys, cellRes)
-    val clsById = RasterOps.boundedCollect(polys, "training-label")
-      .map(p => (p.poly_id, p.part) -> p.cls).toMap
-    val clsB = spark.sparkContext.broadcast(clsById)
-    tiles.joinWith(broadcast(pc), tiles("cell_id") === pc("cell_id"))
-      .flatMap { case (t, p) =>
-        val cb = GridIndex.cellBounds(p.cell_id)
-        val rings: Geom.Rings = p.rings.map(_.map(q => (q.x, q.y)))
-        val label = clsB.value((p.poly_id, p.part))
-        val out = scala.collection.mutable.ArrayBuffer.empty[Sample]
-        var row = 0
-        while (row < t.th) {
-          val cy = t.y_max - (row + 0.5) * t.px
-          var c = 0
-          while (c < t.tw) {
-            val cx = t.x_min + (c + 0.5) * t.px
-            if (cx >= cb.x0 && cx < cb.x1 && cy >= cb.y0 && cy < cb.y1 &&
-              Geom.pointInPolygon(cx, cy, rings)) {
-              out += Sample(label, t.bands.map(_(row * t.tw + c)))
-            }
-            c += 1
-          }
-          row += 1
+    val table = PolyIndex.build(polys, cellRes).table
+    tiles.flatMap { t =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[Sample]
+      val cell = table.value.get(t.cell_id)
+      if (cell != null)
+        cell.foreachOwned(t.x_min, t.y_max, t.px, t.tw, t.th) { (e, i) =>
+          out += Sample(e.cls, t.bands.map(_(i)))
         }
-        out
-      }
+      out
+    }
   }
 
   /** create_model: class centroids with one grouped aggregate. */

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -13,12 +12,13 @@ import graft.core.{Geom, GridIndex}
  * shape.py:1023-1068).
  *
  * Engine plan (SURVEY §3.1): the polygon side explodes into its covering
- * grid cells and is BROADCAST (small); the tile side — arbitrarily huge —
- * joins on `cell_id` with zero shuffle, then a typed flatMap applies the
- * exact per-pixel test (cell-ownership + nodata + PIP) and emits
- * per-(poly, band, value) HISTOGRAM partials. Every zonal statistic is
- * then derived from the merged histogram with built-in aggregates, so
- * partial/final aggregation, codegen and AQE all come from Catalyst.
+ * grid cells and is BROADCAST as a [[PolyIndex]] (small); the tile side —
+ * arbitrarily huge — probes it by `cell_id` inside one mapPartitions with
+ * zero shuffle, applies the exact per-pixel test (cell-ownership + nodata
+ * + PIP) and emits per-(poly, band, value) HISTOGRAM partials. Every zonal
+ * statistic is then derived from the merged histogram with built-in
+ * aggregates, so partial/final aggregation, codegen and AQE all come from
+ * Catalyst.
  *
  * Pixel values are whatever the raster holds; the histogram is exact
  * (the reference's zonal regime is uint8-ish, shape.py:1704-1710, so
@@ -27,8 +27,8 @@ import graft.core.{Geom, GridIndex}
  * Scale: the only shuffle in the whole pipeline is the final
  * groupBy(poly_id, band, value) over histogram partials — rows whose
  * count is bounded by (polygons x bands x distinct-values), i.e. tiny
- * compared to pixels. Dense-cell skew lands on the broadcast-join's
- * streamed side only, which AQE splits; no single reducer ever sees a
+ * compared to pixels. Dense-cell skew lands on the streamed tile side
+ * only (`pipParallelism` spreads it); no single reducer ever sees a
  * pixel-proportional row count.
  */
 object ZonalStats {
@@ -81,98 +81,39 @@ object ZonalStats {
     }
   }
 
-  /** One pre-resolved (cell, polygon-part) prefilter entry of the
-    * broadcast index: rings/bbox converted ONCE at build time instead of
-    * per joined pair; per-ring packed (xs, ys) arrays feed the per-pixel
-    * PIP (flat-array reads, no Tuple2 chase per vertex). */
-  private final case class PolyPre(polyId: Long, rings: Geom.Rings,
-                                   xss: Array[Array[Double]],
-                                   yss: Array[Array[Double]],
-                                   pb: Geom.BBox) extends Serializable
-
-  /** Hard cap on the driver-held prefilter index — the SAME smallness
-    * contract the plan-level BroadcastExchange this path replaced
-    * enforced implicitly (its build side was collected to the driver
-    * too), made loud: a vector layer whose cell cover exceeds it fails
-    * fast instead of OOM-ing the driver. 2^22 entries ~ a few hundred MB
-    * of rings at typical ring sizes. */
-  val MaxBroadcastPolyCells: Int = 1 << 22
-
-  /** The build side of the zonal join: the polygon layer's prefilter
-    * index, held in a broadcast variable. Build it once with [[index]]
-    * and probe it with any number of [[histogram]] calls; `destroy`
-    * releases the broadcast once no probe will run again. */
-  final class PolyIndex private[ZonalStats] (
-      private[ZonalStats] val bc: Broadcast[java.util.HashMap[Long, Array[PolyPre]]]) {
-    def destroy(): Unit = bc.destroy()
-  }
-
-  /** Build the zonal prefilter index: the polygon side (small by the
-    * zonal contract) is exploded into covering cells, collected once to
-    * the driver (bounded, fail-fast — see MaxBroadcastPolyCells),
-    * grouped by cell_id with rings/bbox pre-converted, and shipped via
-    * sparkContext.broadcast. One Spark job; `cellRes` must be the
-    * resolution the probed tiles were cut at. */
-  def index(polys: Dataset[PolyRow], cellRes: Int)
-           (implicit spark: SparkSession): PolyIndex = {
-    import spark.implicits._
-    val pcLocal = polyCells(polys, cellRes).limit(MaxBroadcastPolyCells + 1).collect()
-    require(pcLocal.length <= MaxBroadcastPolyCells,
-      s"zonal prefilter index exceeds $MaxBroadcastPolyCells (cell, polygon) " +
-        "entries — coarsen cellRes or shard the polygon layer")
-    val byCell = new java.util.HashMap[Long, Array[PolyPre]]()
-    pcLocal.groupBy(_.cell_id).foreach { case (cell, entries) =>
-      byCell.put(cell, entries.map { p =>
-        val rings: Geom.Rings = p.rings.map(_.map(q => (q.x, q.y)))
-        PolyPre(p.poly_id, rings,
-          p.rings.map(_.map(_.x)), p.rings.map(_.map(_.y)),
-          Geom.bbox(rings))
-      })
-    }
-    new PolyIndex(spark.sparkContext.broadcast(byCell))
-  }
-
-  /** Tiles x polygons histogram: builds the polygon index ([[index]])
-    * and probes it once. Callers that probe the same layer repeatedly
-    * (per shard, per micro-batch) build the index themselves and call
-    * the [[PolyIndex]] form. */
+  /** Tiles x polygons histogram: builds the polygon index
+    * ([[PolyIndex.build]]) and probes it once. Callers that probe the same
+    * layer repeatedly (per shard, per micro-batch) build the index
+    * themselves and call the [[PolyIndex]] form. */
   def histogram(tiles: Dataset[TileRow], polys: Dataset[PolyRow], cellRes: Int,
                 pipParallelism: Int = 0)
                (implicit spark: SparkSession): DataFrame =
-    histogram(tiles, index(polys, cellRes), pipParallelism)
+    histogram(tiles, PolyIndex.build(polys, cellRes), pipParallelism)
 
   /**
    * The probe side of the zonal join, executed as a broadcast-VARIABLE
-   * map join: the build ends at the broadcast `index` (see [[index]]);
-   * here the tile side streams through ONE mapPartitions that looks each
-   * tile's cell_id up in the index, runs the exact per-pixel test and
+   * map join over a built [[PolyIndex]]: the tile side streams through
+   * ONE mapPartitions that looks each tile's cell_id up in the index,
+   * runs the exact per-pixel test (cell-owned pixels clipped to the
+   * polygon bbox, nodata skipped, PIP unless the tile is interior) and
    * accumulates per-(poly, band) histograms for the whole partition,
-   * emitting only the merged partials. vs the previous plan-level
-   * joinWith(broadcast(pc)):
-   *  - pixels never enter Tungsten rows between the tiler and the
-   *    kernel (EliminateSerialization fuses the two typed operators —
-   *    the join forced a serialize + per-matched-pair deserialize of
-   *    every pixel array);
-   *  - the pre-shuffle row count drops from (pairs x distinct values)
-   *    to (polys x bands x values x partitions);
-   *  - ring/bbox conversion happens once per (cell, poly) at build
-   *    time, not once per joined pair.
-   * Output rows and the final groupBy are IDENTICAL to the join form
-   * (oracle-checked); the only shuffle is still the summary-sized
-   * histogram merge. The returned plan reads the broadcast when it
-   * runs, so `index` must not be destroyed before it has.
+   * emitting only the merged partials. Pixels never enter Tungsten rows
+   * between the tiler and the kernel (EliminateSerialization fuses the
+   * two typed operators); the only shuffle is the summary-sized histogram
+   * merge. The returned plan reads the broadcast when it runs, so `index`
+   * must not be destroyed before it has.
    */
   def histogram(tiles: Dataset[TileRow], index: PolyIndex, pipParallelism: Int)
                (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val bc = index.bc
+    val table = index.table
     // Dense cells concentrate (tile x poly) pairs in few input partitions
     // and the map-side join gives AQE no shuffle to split — the salted
     // repartition below is the north rule's fix. Worth it exactly when the
     // per-pair PIP kernel dominates the one-off payload shuffle.
     val src = if (pipParallelism > 0) tiles.repartition(pipParallelism) else tiles
     src.mapPartitions { it =>
-      val idx = bc.value
+      val idx = table.value
       // partition-level accumulators keyed by (poly_id, band):
       // uint8-regime fast path (the reference's native domain,
       // shape.py:1704-1710) counts integral values in [0, 256) into a
@@ -204,59 +145,34 @@ object ZonalStats {
         flat.clear(); over.clear(); overCount = 0L
       }
       it.foreach { t =>
-        val entries = idx.get(t.cell_id)
-        if (entries != null) {
-          val cb = GridIndex.cellBounds(t.cell_id)
+        val cell = idx.get(t.cell_id)
+        if (cell != null) {
+          val entries = cell.entries
           var ei = 0
           while (ei < entries.length) {
             val p = entries(ei)
-            val rings = p.rings
-            val pb = p.pb
-            // interior-tile shortcut: when the rect spanned by the tile's
-            // pixel CENTERS sits entirely inside the polygon, every center
-            // passes PIP — large polygons pay zero per-pixel geometry. The
-            // bbox pre-check keeps boundary/exterior pairs (the common
-            // case) from paying the full ring scans of the containment
-            // test.
-            val centers = Geom.BBox(
-              t.x_min + 0.5 * t.px, t.y_max - (t.th - 0.5) * t.px,
-              t.x_min + (t.tw - 0.5) * t.px, t.y_max - 0.5 * t.px)
-            val fullInside =
-              pb.x0 <= centers.x0 && centers.x1 <= pb.x1 &&
-              pb.y0 <= centers.y0 && centers.y1 <= pb.y1 &&
-              Geom.rectInsidePolygon(centers, rings)
-            // Hoist the per-pixel ownership + bbox bounds out of the inner
-            // loop: the row predicate (cy in cell & poly-bbox y-range) and
-            // col predicate (cx in cell & poly-bbox x-range) are monotone
-            // in row/col, so each holds on a contiguous index range found
-            // by scanning the EXACT per-pixel expressions once per pair
-            // (bit-identical acceptance set, O(tw+th) instead of tw*th).
-            var rowLo = 0
-            while (rowLo < t.th && !rowOk(t, rowLo, cb, pb)) rowLo += 1
-            var rowHi = t.th - 1
-            while (rowHi >= rowLo && !rowOk(t, rowHi, cb, pb)) rowHi -= 1
-            var colLo = 0
-            while (colLo < t.tw && !colOk(t, colLo, cb, pb)) colLo += 1
-            var colHi = t.tw - 1
-            while (colHi >= colLo && !colOk(t, colHi, cb, pb)) colHi -= 1
-            if (rowLo <= rowHi && colLo <= colHi) {
+            // interior-tile shortcut, then the owned rows/cols clipped to
+            // the polygon bbox, hoisted out of the pixel loop (PolyIndex)
+            val fullInside = p.interior(t.x_min, t.y_max, t.px, t.tw, t.th)
+            val rows = cell.rows(t.y_max, t.px, t.th, p.bbox)
+            val cols = cell.cols(t.x_min, t.px, t.tw, p.bbox)
+            if (!rows.isEmpty && !cols.isEmpty) {
               val key = (p.polyId, t.band)
               var arr = flat.get(key)
               if (arr == null) { arr = new Array[Long](256); flat.put(key, arr) }
               var acc = over.get(key)
               val nod = t.nodata
               val nodNaN = nod.isNaN
-              var row = rowLo
-              while (row <= rowHi) {
+              var row = rows.lo
+              while (row <= rows.hi) {
                 val cy = t.y_max - (row + 0.5) * t.px
                 val base = row * t.tw
-                var col = colLo
-                while (col <= colHi) {
+                var col = cols.lo
+                while (col <= cols.hi) {
                   val v = t.pixels(base + col)
                   val isNodata = if (nodNaN) v.isNaN else v == nod
                   if (!isNodata && (fullInside ||
-                      Geom.pointInPolygonPacked(t.x_min + (col + 0.5) * t.px, cy,
-                        p.xss, p.yss))) {
+                      p.contains(t.x_min + (col + 0.5) * t.px, cy))) {
                     val iv = v.toInt
                     if (iv >= 0 && iv < 256 && iv.toFloat == v) arr(iv) += 1L
                     else {
@@ -289,22 +205,6 @@ object ZonalStats {
       out.iterator
     }.toDF("poly_id", "band", "value", "cnt")
       .groupBy("poly_id", "band", "value").agg(sum("cnt").as("cnt"))
-  }
-
-  /** The EXACT per-row ownership/bbox predicate of the histogram kernel
-    * (hoisted — see the range scan above). */
-  @inline private def rowOk(t: TileRow, row: Int, cb: Geom.BBox,
-                            pb: Geom.BBox): Boolean = {
-    val cy = t.y_max - (row + 0.5) * t.px
-    cy >= cb.y0 && cy < cb.y1 && cy >= pb.y0 && cy <= pb.y1
-  }
-
-  /** The EXACT per-col ownership/bbox predicate (pixel belongs to exactly
-    * one (tile, cell) row). */
-  @inline private def colOk(t: TileRow, col: Int, cb: Geom.BBox,
-                            pb: Geom.BBox): Boolean = {
-    val cx = t.x_min + (col + 0.5) * t.px
-    cx >= cb.x0 && cx < cb.x1 && cx >= pb.x0 && cx <= pb.x1
   }
 
   /** Fold partial histograms (per batch / per shard) back into one

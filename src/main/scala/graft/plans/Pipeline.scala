@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{ImageRow, PolyRow}
-import graft.operators.{Tiler, ZonalStats}
+import graft.operators.{PolyIndex, Tiler, ZonalStats}
 
 /**
  * The checkpoint-resumable flagship pipeline (north rule: "all stages
@@ -77,9 +77,9 @@ object Pipeline {
     val pending = table.pending(allShards)
     // the table's file listing and schema inference, once per run
     lazy val images = spark.read.parquet(imagesPath)
-    var built: Option[ZonalStats.PolyIndex] = None
-    def index: ZonalStats.PolyIndex = built.getOrElse {
-      val idx = ZonalStats.index(polys, cellRes)
+    var built: Option[PolyIndex] = None
+    def index: PolyIndex = built.getOrElse {
+      val idx = PolyIndex.build(polys, cellRes)
       built = Some(idx)
       idx
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.{ImageRow, PolyRow}
-import graft.operators.{Tiler, ZonalStats}
+import graft.operators.{PolyIndex, Tiler, ZonalStats}
 
 /**
  * Structured-Streaming ingest for the image table. The reference is
@@ -38,7 +38,7 @@ object ImageStream {
     // the polygon index is built once per stream (held for the stream's
     // life); each micro-batch only probes it: decode -> tile -> PIP ->
     // histogram
-    val index = ZonalStats.index(spark.createDataset(polys), cellRes)
+    val index = PolyIndex.build(spark.createDataset(polys), cellRes)
     val query = stream.writeStream
       .foreachBatch { (batch: Dataset[ImageRow], batchId: Long) =>
         writeBatchDelta(batch, batchId, index, cellRes, tileSize, outDir)
@@ -57,7 +57,7 @@ object ImageStream {
     * exactly-once end-to-end; stats() folds partitions unchanged).
     * `private[graft]` so the replay invariance is spec-testable. */
   private[graft] def writeBatchDelta(batch: Dataset[ImageRow], batchId: Long,
-                                     index: ZonalStats.PolyIndex, cellRes: Int,
+                                     index: PolyIndex, cellRes: Int,
                                      tileSize: Int, outDir: String): Unit = {
     implicit val s: SparkSession = batch.sparkSession
     val tiles = Tiler.tiles(batch, tileSize, cellRes)

@@ -24,9 +24,6 @@ object TextOps {
 
   // ------------------------------------------------------------ analysis
 
-  /** Whitespace token count. */
-  def tokenCount(text: Column): Column = size(split(text, " "))
-
   /** BPE-ish token count: letter runs, digit runs, or single non-space
     * symbols — the standard pre-tokenizer shape. */
   def bpeishTokenCount(text: Column): Column =

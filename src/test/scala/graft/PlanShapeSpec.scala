@@ -346,9 +346,27 @@ class PlanShapeSpec extends AnyFunSuite {
     val cellRes = Tiler.resForCellSize(64.0)
     val tiles = Tiler.multiTiles(images, 64, cellRes)
     val p = plan(Training.extractSamples(tiles, polys, cellRes).toDF())
-    assert(p.contains("BroadcastHashJoin"), s"expected broadcast prefilter:\n$p")
-    assert(!p.contains("Exchange hashpartitioning"),
-      s"extractSamples must not hash-shuffle pixels:\n$p")
+    // the polygon side is a sparkContext broadcast INDEX probed inside the
+    // tile flatMap (PolyIndex): no join operator, no exchange at all
+    assert(!p.contains("SortMergeJoin") && !p.contains("BroadcastHashJoin"),
+      s"extractSamples prefilter regressed to a plan-level join:\n$p")
+    assert(!p.contains("Exchange"), s"extractSamples must not shuffle pixels:\n$p")
+  }
+
+  test("pairHistogram, zonalRgbIndices: map-side broadcast index, no join, ONE aggregate exchange") {
+    import graft.operators.{Glcm, RasterOps, Tiler}
+    val images = spark.createDataset(Synth.images(4, seed = 2L, bands = 3).toSeq)
+    val polys = spark.createDataset(Synth.polygons(2).toSeq)
+    val cellRes = Tiler.resForCellSize(64.0)
+    val glcm = plan(Glcm.pairHistogram(Tiler.tiles(images, 64, cellRes, halo = 1), polys,
+      cellRes, halo = 1, tileSize = 64))
+    val rgb = plan(RasterOps.zonalRgbIndices(Tiler.multiTiles(images, 64, cellRes), polys, cellRes))
+    for ((name, p) <- Seq("pairHistogram" -> glcm, "zonalRgbIndices" -> rgb)) {
+      assert(!p.contains("SortMergeJoin") && !p.contains("BroadcastHashJoin"),
+        s"$name prefilter regressed to a plan-level join:\n$p")
+      assert("Exchange hashpartitioning".r.findAllIn(p).size <= 1,
+        s"more than one shuffle in $name:\n$p")
+    }
   }
 }
 

@@ -3,98 +3,12 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.{GeoScale, GridIndex, Hex, PixelCodec}
-import graft.gen.GridImages
-import graft.operators.{Glcm, Tiler}
+import graft.core.{GeoScale, GridIndex, Hex}
 
-/** Round-3 fix gates: GLCM cross-tile halo pairs, core-origin dedupe
-  * when a cell spans several tiles, and the latitude-aware cell mode. */
+/** Round-3 fix gates: the latitude-aware cell mode. */
 class Round3FixSpec extends AnyFunSuite {
   implicit lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
-
-  private def naivePairs(imgs: Seq[ImageRow], w: Int, h: Int,
-                         dx: Int, dy: Int): Map[(Int, Int), Long] = {
-    val acc = scala.collection.mutable.Map.empty[(Int, Int), Long].withDefaultValue(0L)
-    imgs.foreach { img =>
-      val b = PixelCodec.decode(img.bytes, img.fmt, w, h).bands(0)
-      for (y <- 0 until h; x <- 0 until w) {
-        val py = y + dy; val px = x + dx
-        if (py >= 0 && py < h && px >= 0 && px < w) {
-          val a = (b(y * w + x) / 8).toInt
-          val q = (b(py * w + px) / 8).toInt
-          acc((a, q)) += 1; acc((q, a)) += 1
-        }
-      }
-    }
-    acc.toMap
-  }
-
-  private def allPoly = PolyRow(0L, 0, Array(Array(
-    Pt(-1000, -1000), Pt(5000, -1000), Pt(5000, 1000), Pt(-1000, 1000))),
-    1, "all", 0.0)
-
-  test("GLCM halo tiles == naive full-window pairs (pairs cross the tile edge)") {
-    val cellRes = Tiler.resForCellSize(64.0)
-    val imgs = GridImages.images(3, bands = 1)
-    val tiles = Tiler.tiles(spark.createDataset(imgs.toSeq), 64, cellRes, halo = 1)
-    for ((dx, dy) <- Seq((1, 0), (0, 1), (1, 1), (-1, 1))) {
-      val got = Glcm.pairHistogram(tiles, Seq(allPoly).toDS, cellRes,
-        dx, dy, levels = 32, maxVal = 256f, halo = 1, tileSize = 64)
-        .as[(Long, Int, Int, Int, Long)].collect()
-        .map { case (_, _, q1, q2, c) => (q1, q2) -> c }.toMap
-      val naive = naivePairs(imgs, GridImages.W, GridImages.H, dx, dy)
-      assert(got == naive, s"offset ($dx, $dy)")
-    }
-  }
-
-  test("GLCM halo + PARTIAL polygon mask == naive masked pairs") {
-    // polygon covers only part of each image and crosses the 64-px tile
-    // boundary of image 0 — origin/partner membership must follow the
-    // mask exactly, including pairs whose partner sits in halo pixels
-    val poly = PolyRow(0L, 0, Array(Array(
-      Pt(40, -40), Pt(330, -40), Pt(330, -5), Pt(40, -5))), 1, "part", 0.0)
-    val imgs = GridImages.images(2, bands = 1)
-    def inPoly(i: Int, x: Int, y: Int): Boolean = {
-      val wx = GridImages.xMin(i.toLong) + x + 0.5
-      val wy = GridImages.yMax(i.toLong) - y - 0.5
-      wx > 40 && wx < 330 && wy > -40 && wy < -5
-    }
-    val acc = scala.collection.mutable.Map.empty[(Int, Int), Long].withDefaultValue(0L)
-    imgs.zipWithIndex.foreach { case (img, i) =>
-      val b = PixelCodec.decode(img.bytes, img.fmt, GridImages.W, GridImages.H).bands(0)
-      for (y <- 0 until GridImages.H; x <- 0 until GridImages.W - 1)
-        if (inPoly(i, x, y) && inPoly(i, x + 1, y)) {
-          val a = (b(y * GridImages.W + x) / 8).toInt
-          val q = (b(y * GridImages.W + x + 1) / 8).toInt
-          acc((a, q)) += 1; acc((q, a)) += 1
-        }
-    }
-    val cellRes = Tiler.resForCellSize(64.0)
-    val tiles = Tiler.tiles(spark.createDataset(imgs.toSeq), 64, cellRes, halo = 1)
-    val got = Glcm.pairHistogram(tiles, Seq(poly).toDS, cellRes,
-      dx = 1, dy = 0, levels = 32, maxVal = 256f, halo = 1, tileSize = 64)
-      .as[(Long, Int, Int, Int, Long)].collect()
-      .map { case (_, _, q1, q2, c) => (q1, q2) -> c }.toMap
-    assert(got == acc.toMap)
-    assert(got.nonEmpty)
-  }
-
-  test("GLCM core-origin dedupe: cell spanning TWO tiles still counts pairs once") {
-    // 128-unit cells over 64-px tiles: both tiles of a cell see shared
-    // halo pixels INSIDE the cell — only core origins may count them
-    val w = 128; val h = 32
-    val b = Array.tabulate(w * h)(p => (((p % w) * 7 + (p / w) * 13) % 97).toFloat)
-    val img = ImageRow("two", PixelCodec.encode(PixelCodec.FmtRawLe, w, h, Array(b)),
-      w, h, PixelCodec.FmtRawLe, "c", 0L, 0.0, 0.0, 1.0)
-    val cellRes = Tiler.resForCellSize(128.0)
-    val tiles = Tiler.tiles(Seq(img).toDS, 64, cellRes, halo = 1)
-    val got = Glcm.pairHistogram(tiles, Seq(allPoly).toDS, cellRes,
-      dx = 1, dy = 0, levels = 32, maxVal = 256f, halo = 1, tileSize = 64)
-      .as[(Long, Int, Int, Int, Long)].collect()
-      .map { case (_, _, q1, q2, c) => (q1, q2) -> c }.toMap
-    assert(got == naivePairs(Seq(img), w, h, 1, 0))
-  }
 
   test("geo cells: east-west ground distance exact; adjacency holds at every latitude") {
     for (lat <- Seq(-60.0, -30.0, 0.0, 45.0, 66.5)) {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.core.{Geom, PixelCodec}
 import graft.gen.Synth
-import graft.operators.{Tiler, ZonalStats}
+import graft.operators.{PolyIndex, Tiler, ZonalStats}
 import graft.streaming.ImageStream
 import java.nio.file.Files
 
@@ -83,7 +83,7 @@ class ImageStreamSpec extends AnyFunSuite {
     val polys = Synth.polygons(nExtra = 2)
     val cellRes = Tiler.resForCellSize(64.0)
     val out = Files.createTempDirectory("graft_stream_replay_").toString + "/hist"
-    val index = ZonalStats.index(spark.createDataset(polys.toSeq), cellRes)
+    val index = PolyIndex.build(spark.createDataset(polys.toSeq), cellRes)
     val b0 = spark.createDataset(images.take(4).toSeq)
     val b1 = spark.createDataset(images.drop(4).toSeq)
 
